@@ -587,10 +587,13 @@ object MinHashDedup {
         withId.where(keepUdf(col(IdCol))).drop(IdCol)
       case Clustering.Distributed(roots) =>
         // dropped rows removed via broadcast-able anti-join on the
-        // (id, root) pairs with root ≠ id
-        val dropped = roots.where(col("root") =!= col("id")).select("id")
-        withId.join(dropped.withColumnRenamed("id", IdCol),
-          Seq(IdCol), "left_anti").drop(IdCol)
+        // (id, root) pairs with root ≠ id; the dropped ids are
+        // materialized so the persisted roots can be released before the
+        // lazy kept frame is returned
+        val dropped = roots.where(col("root") =!= col("id"))
+          .select(col("id").as(IdCol)).localCheckpoint(true)
+        roots.unpersist()
+        withId.join(dropped, Seq(IdCol), "left_anti").drop(IdCol)
     }
 
   /** (id, root) for EVERY row — rows in no duplicate cluster root to
@@ -659,10 +662,13 @@ object MinHashDedup {
         case Clustering.Driver(roots) =>
           histogramDf(spark, driverHistogram(roots, withId.count()))
         case Clustering.Distributed(ccRoots) =>
-          componentRootsOf(withId, Clustering.Distributed(ccRoots))
-            .groupBy("root").agg(count(lit(1)).as("cluster_size"))
-            .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-            .localCheckpoint(true)
+          val hist =
+            componentRootsOf(withId, Clustering.Distributed(ccRoots))
+              .groupBy("root").agg(count(lit(1)).as("cluster_size"))
+              .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
+              .localCheckpoint(true)
+          ccRoots.unpersist()
+          hist
       }
     }
     withId.unpersist()
@@ -687,13 +693,16 @@ object MinHashDedup {
     * Kept SET equality with [[deduplicate]] + [[clusterSizeStats]] is
     * proven by DedupInvariantSpec (driver path) and ScaleSoakSpec
     * (distributed path). The corpus cache `assignId` pinned stays live
-    * for the lazy kept frame, exactly like [[deduplicate]].
+    * for the lazy kept frame; with `pinSink` it is appended there for the
+    * caller to release after its last read of the kept frame.
     */
   def deduplicateWithStats(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): (DataFrame, DataFrame) = {
+      bandedSink: Option[String] = None,
+      pinSink: Option[mutable.Buffer[DataFrame]] = None)
+      : (DataFrame, DataFrame) = {
     val withId = assignId(df, orderCol)
     val spark = withId.sparkSession
     val res = withCacheRelease { cacheSink =>
@@ -728,6 +737,7 @@ object MinHashDedup {
             .agg(count(lit(1)).as("cluster_size"))
             .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
             .localCheckpoint(true)
+          ccRoots.unpersist()
           (kept, stats)
       }
     }
@@ -739,6 +749,7 @@ object MinHashDedup {
     // flagship_chat_pipeline at sf0.1, r15). Single-consumer entry
     // points ([[deduplicate]] et al.) release — their one output
     // materialization pays the same recompute a cache write would.
+    pinSink.foreach(_ += withId)
     res
   }
 
@@ -846,6 +857,8 @@ object MinHashDedup {
     * monotonically_increasing_id): with a named order the corpus cache
     * is released as soon as clustering materializes
     * ([[releasePinIf]]), and the lazy output re-derives ids from source.
+    * Without one the cache stays for the lazy output; `pinSink` hands it
+    * to the caller to release after its last read.
     *
     * `maxDriverEdges`: above this, clustering switches from the driver
     * UnionFind (reference-faithful) to distributed min-label propagation —
@@ -855,14 +868,15 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame = {
+      bandedSink: Option[String] = None,
+      pinSink: Option[mutable.Buffer[DataFrame]] = None): DataFrame = {
     val withId = assignId(df, orderCol)
     val out = withCacheRelease { sink =>
       keepFirst(withId,
         candidateEdges(withId, column, cfg, bandedSink, Some(sink)),
         maxDriverEdges)
     }
-    releasePinIf(withId, orderCol)
+    releasePinIf(withId, orderCol, pinSink)
     out
   }
 
@@ -889,10 +903,15 @@ object MinHashDedup {
     * projections, e.g. the flagship re-runs its trunk only up to the io
     * select for the 547 kept rows — and flagship_e2e_minhash regressed
     * ~0.4 s under the extra retained blocks. Immediate release stands.
+    *
+    * A kept pin goes to `pinSink` when the caller passes one, so the
+    * caller can release it after its last read of the lazy output.
     */
   private[dedup] def releasePinIf(withId: DataFrame,
-      orderCol: Option[String]): Unit =
+      orderCol: Option[String],
+      pinSink: Option[mutable.Buffer[DataFrame]] = None): Unit =
     if (orderCol.isDefined) withId.unpersist()
+    else pinSink.foreach(_ += withId)
 
   /** The candidate edge list feeding the clustering (identical-class star
     * edges + LSH band collisions — candidates, not verified pairs: the

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -13,6 +15,12 @@ import graft.text.TextFilter
   * filter solely to log reduction percentages — here accounting is an
   * optional SINGLE extra aggregation job over all criteria at once
   * (`filterStats`), not N materializations.
+  *
+  * `dedupPinSink`: the dedup pass caches its input for the lazy kept
+  * frame, which the caller reads after `run` returns. When given, that
+  * cache is appended here and the caller releases it after its last
+  * action ([[Runner.runParsed]] does, after the publish); without it the
+  * cache stays for the session.
   */
 final class Preprocessor(
     df: DataFrame,
@@ -24,7 +32,8 @@ final class Preprocessor(
     dedupOrderCol: Option[String] = None,
     dedupBandedSink: Option[String] = None,
     dedupAuditStats: Boolean = false,
-    dedupJournalPath: Option[String] = None) {
+    dedupJournalPath: Option[String] = None,
+    dedupPinSink: Option[mutable.Buffer[DataFrame]] = None) {
 
   def run(): DataFrame = {
     // ADVICE r16: validate journal preconditions BEFORE any Spark work —
@@ -59,7 +68,7 @@ final class Preprocessor(
         // costs one small agg over the already-checkpointed roots
         val (kept, stats) = graft.dedup.MinHashDedup.deduplicateWithStats(
           filtered, columnName, cfg, orderCol = dedupOrderCol,
-          bandedSink = dedupBandedSink)
+          bandedSink = dedupBandedSink, pinSink = dedupPinSink)
         stats.orderBy(col("cluster_size")).collect().foreach { r =>
           println(s"[graft] dedup($columnName) cluster_size=${r.getLong(0)} " +
             s"n_clusters=${r.getLong(1)}")
@@ -67,7 +76,8 @@ final class Preprocessor(
         kept
       case Some(cfg) =>
         graft.dedup.MinHashDedup.deduplicate(filtered, columnName, cfg,
-          orderCol = dedupOrderCol, bandedSink = dedupBandedSink)
+          orderCol = dedupOrderCol, bandedSink = dedupBandedSink,
+          pinSink = dedupPinSink)
       case None => filtered
     }
     dedupJournalPath match {

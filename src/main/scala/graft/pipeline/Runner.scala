@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,6 +30,16 @@ import graft.sources.Sources
   * current physical order — pass `dedupOrderCol` pointing at a unique
   * Long column to make the kept set partition-deterministic instead
   * (the flagship's `__mid__` pattern; recommended at cluster scale).
+  *
+  * Spark work per pass: the `datasets:` entries load with footer schemas
+  * (no job, [[Sources.combineEntries]]); the ChatML frame is persisted
+  * before the seeded shuffle, whose range sampler and map stage would
+  * otherwise each run the scan → explode → clean → filter → ChatML
+  * trunk — with the cache it runs once, in the first job that reads it.
+  * A clean/filter pass is four jobs whatever the number of entries.
+  * `runParsed` owns every cache the pass pins — that frame and the dedup
+  * passes' corpus pins — and releases them after the publish, so
+  * repeated runs in one session hold nothing.
   */
 object Runner {
 
@@ -38,22 +50,17 @@ object Runner {
     require(args.length >= 2,
       "usage: Runner <config.yaml> <outBase> (hub repo ids in " +
         "output_dataset_path resolve under outBase)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    run(spark, args(0), args(1))
-    // count the PUBLISHED parquet — counting the returned frame would
-    // replay the whole pipeline a second time (r17 review catch)
-    val cfg = MiniYaml.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(args(0))))
-    // Sources.load, not read.parquet: `output_format: arrow` publishes
-    // the HF layout, which load() sniffs and dispatches
-    val n = Sources.load(spark,
-      s"${args(1)}/${cfg("output_dataset_path")}").count()
+    // run returns the PUBLISHED dataset read back: counting it reads the
+    // output instead of replaying the pipeline (r17 review catch)
+    val n = run(spark, args(0), args(1)).count()
     println(s"[runner] published $n chatml rows")
     spark.stop()
   }
@@ -65,6 +72,9 @@ object Runner {
     runParsed(spark, cfg, outBase, dedupOrderCol)
   }
 
+  /** Runs the config and publishes; returns the published dataset read
+    * back (lazy — the pass's caches are already released).
+    */
   def runParsed(spark: SparkSession, cfg: Map[String, Any], outBase: String,
       dedupOrderCol: Option[String] = None): DataFrame = {
     // each entry: dataset_path + optional `split:` selector (utils.py:173
@@ -135,45 +145,54 @@ object Runner {
     val io = Conversations.addContentColumns(
       Conversations.explodeToInputOutput(combined))
 
-    // main.py:43-51 — response pass runs cleaners + filters + dedup
-    val afterResponse = new Preprocessor(io, "response",
-      respCfg.cleaners, respCfg.filters, respCfg.dedup,
-      verbose = verbose,
-      dedupOrderCol = dedupOrderCol,
-      dedupAuditStats = respCfg.dedupAudit,
-      dedupJournalPath = respCfg.dedupJournalPath).run()
-    // main.py:54-63 — instruction pass NEVER cleans (cleaners=[] with a
-    // warning in the reference; config-supplied instruction cleaners are
-    // deliberately dropped here too)
-    val afterInstruction = new Preprocessor(afterResponse, "instruction",
-      cleaners = Seq.empty,
-      filters = instrCfg.filters, dedup = instrCfg.dedup,
-      verbose = verbose,
-      dedupOrderCol = dedupOrderCol,
-      dedupAuditStats = instrCfg.dedupAudit,
-      dedupJournalPath = instrCfg.dedupJournalPath).run()
+    // caches pinned during the pass, released once the publish is done
+    val pins = mutable.Buffer.empty[DataFrame]
+    try {
+      // main.py:43-51 — response pass runs cleaners + filters + dedup
+      val afterResponse = new Preprocessor(io, "response",
+        respCfg.cleaners, respCfg.filters, respCfg.dedup,
+        verbose = verbose,
+        dedupOrderCol = dedupOrderCol,
+        dedupAuditStats = respCfg.dedupAudit,
+        dedupJournalPath = respCfg.dedupJournalPath,
+        dedupPinSink = Some(pins)).run()
+      // main.py:54-63 — instruction pass NEVER cleans (cleaners=[] with a
+      // warning in the reference; config-supplied instruction cleaners
+      // are deliberately dropped here too)
+      val afterInstruction = new Preprocessor(afterResponse, "instruction",
+        cleaners = Seq.empty,
+        filters = instrCfg.filters, dedup = instrCfg.dedup,
+        verbose = verbose,
+        dedupOrderCol = dedupOrderCol,
+        dedupAuditStats = instrCfg.dedupAudit,
+        dedupJournalPath = instrCfg.dedupJournalPath,
+        dedupPinSink = Some(pins)).run()
 
-    // main.py:67-73 — R3 chatml + seeded permutation (R4's
-    // engine-independent md5 key over the row's full content)
-    val chatml = Conversations.convertToChatml(afterInstruction)
-    val shuffled = Conversations.shuffleSeeded(chatml, 42,
-      to_json(struct(col("conversation"), col("source"))))
+      // main.py:67-73 — R3 chatml + seeded permutation (R4's
+      // engine-independent md5 key over the row's full content); the
+      // cache keeps the sort's sampler and map stage from each running
+      // the trunk
+      val chatml = Conversations.convertToChatml(afterInstruction).persist()
+      pins += chatml
+      val shuffled = Conversations.shuffleSeeded(chatml, 42,
+        to_json(struct(col("conversation"), col("source"))))
 
-    // main.py:74 — publish (S5): hub repo id resolved under outBase.
-    // `output_format: arrow` publishes the HF `save_to_disk` layout —
-    // the dataset shape push_to_hub actually lands on the hub — with
-    // optional `output_compression: zstd|lz4` (IPC body compression,
-    // pyarrow-transparent, ~3x fewer bytes on text). The default
-    // parquet publish (hub-ingestible, and what every downstream query
-    // here reads) takes a parquet codec the same way (zstd ≈ 30% fewer
-    // bytes than the snappy default).
-    outFormat match {
-      case "parquet" =>
-        Sources.publish(shuffled, s"$outBase/$outPath",
-          if (outCompression.isEmpty) "snappy" else outCompression)
-      case "arrow" => Sources.saveToDisk(shuffled, s"$outBase/$outPath",
-        compression = outCompression) // "" = uncompressed (HF default)
-    }
-    shuffled
+      // main.py:74 — publish (S5): hub repo id resolved under outBase.
+      // `output_format: arrow` publishes the HF `save_to_disk` layout —
+      // the dataset shape push_to_hub actually lands on the hub — with
+      // optional `output_compression: zstd|lz4` (IPC body compression,
+      // pyarrow-transparent, ~3x fewer bytes on text). The default
+      // parquet publish (hub-ingestible, and what every downstream query
+      // here reads) takes a parquet codec the same way (zstd ≈ 30% fewer
+      // bytes than the snappy default).
+      outFormat match {
+        case "parquet" =>
+          Sources.publish(shuffled, s"$outBase/$outPath",
+            if (outCompression.isEmpty) "snappy" else outCompression)
+        case "arrow" => Sources.saveToDisk(shuffled, s"$outBase/$outPath",
+          compression = outCompression) // "" = uncompressed (HF default)
+      }
+    } finally pins.reverseIterator.foreach(_.unpersist())
+    Sources.load(spark, s"$outBase/$outPath")
   }
 }

@@ -1,6 +1,10 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 
 /** S1/S2/S3/S5 source/sink surface (main.py:78-87, utils.py:173): load a
@@ -12,7 +16,8 @@ object Sources {
 
   /** S1 `load_dataset`: format by extension (parquet/json/csv), plus HF
     * `save_to_disk` directories (state.json or `.arrow` shards →
-    * [[ArrowDataset.load]], the r17 interop reader).
+    * [[ArrowDataset.load]], the r17 interop reader). Parquet goes through
+    * [[readParquet]], so loading launches no Spark job.
     */
   def load(spark: SparkSession, path: String): DataFrame = {
     val p = path.toLowerCase
@@ -22,7 +27,54 @@ object Sources {
       spark.read.option("header", "true").option("inferSchema", "true")
         .csv(path)
     else if (isArrowDatasetDir(spark, path)) ArrowDataset.load(spark, path)
-    else spark.read.parquet(path)
+    else readParquet(spark, path)
+  }
+
+  /** `spark.read.parquet(path)` without Spark's schema-inference job (one
+    * single-task job per call, the fixed cost that dominated a
+    * many-entry `datasets:` load). The schema is read on the driver from
+    * the footer `ParquetUtils.inferSchema` would pick without
+    * `mergeSchema` — `_common_metadata`, then `_metadata`, then the first
+    * data file by path — through Spark's own footer conversion, so the
+    * Catalyst schema Spark stores in the footer and the session's parquet
+    * confs (binaryAsString, int96, timestamp NTZ) yield the inferred
+    * schema. Globs, nested or partitioned directories, `mergeSchema` and
+    * footers that cannot be read keep Spark's inference (and its errors).
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      try footerFile(spark, path)
+        .flatMap(f => GraftParquetBridge.footerSchema(spark, Seq(f)))
+      catch { case NonFatal(_) => None } // Spark's read raises the error
+    schema match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The file whose footer Spark's non-merging inference reads, when the
+    * path is a plain file or a flat directory of files. */
+  private def footerFile(spark: SparkSession,
+      path: String): Option[FileStatus] = {
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        path.exists("{}[]*?\\".contains(_))) return None
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) return Some(st)
+    // the listing rules of InMemoryFileIndex (hidden names) and
+    // ParquetUtils (summary files first, then data files sorted by path)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val (dirs, files) = fs.listStatus(p).filterNot { s =>
+      val n = s.getPath.getName
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) && !summaries.exists(n.startsWith)
+    }.partition(_.isDirectory)
+    if (dirs.nonEmpty) None
+    else summaries.flatMap(n => files.find(_.getPath.getName == n))
+      .headOption.orElse(files.filterNot(f =>
+        summaries.contains(f.getPath.getName))
+        .sortBy(_.getPath.toString).headOption)
   }
 
   private def isArrowDatasetDir(spark: SparkSession,
@@ -65,6 +117,10 @@ object Sources {
     * row with its origin path in `source` when the column is absent.
     * A dict-shaped (DatasetDict) path concatenates its splits in dict
     * order, exactly main.py:82's `concatenate_datasets(dataset.values())`.
+    * Each entry stays its own scan in entry order (one multi-path scan
+    * would pack files largest-first and reorder the rows keep-first
+    * dedup sees); parquet entries take their schema from a footer
+    * ([[readParquet]]), so combining launches no Spark job.
     */
   def combine(spark: SparkSession, paths: Seq[String]): DataFrame =
     combineEntries(spark, paths.map(_ -> None))

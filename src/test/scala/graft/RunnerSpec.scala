@@ -145,6 +145,90 @@ class RunnerSpec extends AnyFunSuite {
     assert(result.count() === 2)
   }
 
+  /** A config over `n` parquet entries of the vicuna-test shape. */
+  private def manyEntryConfig(name: String, n: Int, dedup: String): String = {
+    val dirs = (0 until n).map { i =>
+      val d = s"/tmp/graft_runner_${name}_ds$i"
+      writeDs(d, withSource = i % 2 == 0, Seq(
+        Seq(("hello there friend how are you today", false, "User"),
+          (s"entry $i says sure thing happy to help you.", true,
+            "Assistant")),
+        Seq(("another prompt with enough words in it", false, "User"),
+          ("sure thing happy to help you glad to assist.", true,
+            "Assistant")),
+        Seq(("short prompt words here are five six", false, "User"),
+          ("hi.", true, "Assistant"))))
+      d
+    }
+    val yaml =
+      s"""datasets:
+         |${dirs.map(d => s"  - dataset_path: \"$d\"").mkString("\n")}
+         |output_dataset_path: "acme/$name"
+         |instruction_config:
+         |  filters:
+         |    check_word_number:
+         |      args:
+         |        min_word_threshold: 2
+         |        max_word_threshold: 9999999
+         |response_config:
+         |  cleaners:
+         |    normalize_whitespace: true
+         |    remove_empty_lines: true
+         |  filters:
+         |    check_word_number:
+         |      args:
+         |        min_word_threshold: 3
+         |        max_word_threshold: 9999999
+         |    check_completion:
+         |$dedup""".stripMargin
+    val cfgPath = s"/tmp/graft_runner_${name}_cfg.yaml"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(cfgPath), yaml)
+    cfgPath
+  }
+
+  test("job budget: a clean/filter pass over 4 parquet entries runs " +
+      "at most 4 Spark jobs") {
+    // the seeded shuffle's jobs and the write, whatever the entry count;
+    // a schema-inference job per entry would add 4 (the pre-shuffle cache
+    // keeps the range sampler from replaying the trunk)
+    val cfgPath = manyEntryConfig("budget", 4, "")
+    val outBase = "/tmp/graft_runner_budget_out"
+    val (result, jobs) = org.apache.spark.JobCount.of(spark.sparkContext) {
+      Runner.run(spark, cfgPath, outBase)
+    }
+    assert(jobs <= 4, s"Runner pass ran $jobs Spark jobs")
+    // "hi" fails the word count in every entry
+    assert(spark.read.parquet(s"$outBase/acme/budget").count() === 8)
+    assert(result.count() === 8)
+  }
+
+  test("Runner.run releases every cache it pins: dedup corpus pins and " +
+      "the pre-shuffle cache") {
+    val dedup =
+      """  deduplication:
+        |    do_deduplication: true
+        |    audit_stats: %s
+        |    args:
+        |      ngram_size: 5
+        |      num_perm: 256
+        |      threshold: 0.7
+        |      min_ngram_size: 5
+        |""".stripMargin
+    val sc = spark.sparkContext
+    Seq("true", "false").foreach { audit =>
+      val cfgPath = manyEntryConfig(s"pins_$audit", 2, dedup.format(audit))
+      val before = sc.getPersistentRDDs.keySet
+      (0 until 3).foreach { _ =>
+        // every entry repeats one response: dedup keeps one of them
+        assert(Runner.run(spark, cfgPath, s"/tmp/graft_runner_pins_out")
+          .count() === 3)
+      }
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty,
+        s"audit_stats=$audit: Runner left ${left.size} persisted RDDs")
+    }
+  }
+
   test("a DatasetDict source runs end-to-end; split: selects one split") {
     import scala.jdk.CollectionConverters._
     // main.py:81-82: load_dataset returns a DatasetDict and the

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,5 +71,101 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(x => (x.getLong(0), x.getString(1))).toSeq
     // id 4: null and "" hash identically through the coalesce — unchanged
     assert(r == Seq((2L, "changed"), (3L, "removed"), (5L, "added")))
+  }
+
+  /** Parquet entries of several shapes under one directory. */
+  private val Base = "/tmp/graft_sources_footer"
+
+  private def writeEntries(): Map[String, String] = {
+    import spark.implicits._
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(Base))
+    val convs = (0 until 12).map(i => (s"text $i", s"orig/$i"))
+    // one part file with `source`: the entry is the FILE
+    convs.toDF("text", "source").coalesce(1)
+      .write.parquet(s"$Base/with_source")
+    val single = new java.io.File(s"$Base/with_source").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).head
+    // a multi-file directory without `source`
+    convs.map(_._1).toDF("text").repartition(3)
+      .write.parquet(s"$Base/multi")
+    // different columns: unioned with allowMissingColumns
+    convs.map(c => (c._1, c._1.length)).toDF("text", "len").coalesce(2)
+      .write.parquet(s"$Base/extra_col")
+    // Catalyst types and field metadata live in the footer's Spark
+    // schema key: decimal, timestamp_ntz, a commented column
+    spark.sql(
+      """SELECT CAST(id AS DECIMAL(12, 3)) AS amount,
+        |  CAST(TIMESTAMP_NTZ'2024-01-02 03:04:05' + make_interval(0, 0, 0,
+        |    CAST(id AS INT)) AS TIMESTAMP_NTZ) AS at,
+        |  CAST(id AS SHORT) AS small, concat('t', id) AS text
+        |FROM range(5)""".stripMargin)
+      .withColumn("text", col("text").as("text",
+        new MetadataBuilder().putString("comment", "a note").build()))
+      .coalesce(1).write.parquet(s"$Base/catalyst")
+    Map("single" -> single, "multi" -> s"$Base/multi",
+      "extra_col" -> s"$Base/extra_col", "catalyst" -> s"$Base/catalyst")
+  }
+
+  /** Same schema and same rows in the same order as Spark's inference. */
+  private def assertSameAsInferred(fast: DataFrame, ref: DataFrame): Unit = {
+    assert(fast.schema === ref.schema)
+    assert(fast.collect().toSeq === ref.collect().toSeq)
+  }
+
+  test("Sources.load reads parquet with the footer schema Spark infers") {
+    val entries = writeEntries()
+    entries.values.foreach { p =>
+      assertSameAsInferred(Sources.load(spark, p), spark.read.parquet(p))
+    }
+    val catalyst = Sources.load(spark, entries("catalyst")).schema
+    assert(catalyst("amount").dataType === DecimalType(12, 3))
+    assert(catalyst("at").dataType === TimestampNTZType)
+    assert(catalyst("text").metadata.getString("comment") === "a note")
+
+    // a footer without Spark's schema key (a non-Spark writer) converts
+    // under the session's parquet confs: binaryAsString turns an
+    // unannotated BINARY column into a string, as inference does
+    val foreign = s"$Base/foreign/part-0.parquet"
+    val pqSchema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required binary payload; " +
+        "optional int32 n; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(foreign))
+      .withType(pqSchema).build()
+    val groups =
+      new org.apache.parquet.example.data.simple.SimpleGroupFactory(pqSchema)
+    (0 until 3).foreach(i =>
+      w.write(groups.newGroup().append("payload", s"p$i").append("n", i)))
+    w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    Seq("false", "true").foreach { v =>
+      spark.conf.set(key, v)
+      try {
+        val fast = Sources.load(spark, s"$Base/foreign")
+        assertSameAsInferred(fast, spark.read.parquet(s"$Base/foreign"))
+        assert(fast.schema("payload").dataType ===
+          (if (v == "true") StringType else BinaryType))
+      } finally spark.conf.unset(key)
+    }
+  }
+
+  test("combineEntries over parquet entries launches no Spark job and " +
+      "equals per-entry inferred reads") {
+    val entries = writeEntries()
+    val paths = Seq("single", "multi", "extra_col", "catalyst").map(entries)
+    val (combined, jobs) = org.apache.spark.JobCount.of(spark.sparkContext) {
+      Sources.combineEntries(spark, paths.map(_ -> None))
+    }
+    assert(jobs === 0, s"combineEntries launched $jobs jobs")
+    // reference: spark.read.parquet per entry, source tagged when absent,
+    // unioned by name in entry order
+    val ref = Sources.concatenate(paths.map { p =>
+      val df = spark.read.parquet(p)
+      if (df.columns.contains("source")) df
+      else df.withColumn("source", lit(p))
+    })
+    assertSameAsInferred(combined, ref)
+    // the file entry kept its own source; the others are tagged
+    assert(combined.select("source").distinct().count() === 12 + 3)
   }
 }
